@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** One bench session — the exact config Verify uses (see the inline
-    * rationale on each knob). Rebuilt PER FAMILY CHUNK (round 11): the
+  /** The one session recipe: Bench, Verify and the test suite
+    * (`TestSpark`) all build their session here (see the inline rationale
+    * on each knob). Bench rebuilds it PER FAMILY CHUNK (round 11): the
     * session-inflation class (m4 r8, dp19 r9, w23/s14 r10 — a query slow
     * in the full run but fast solo, from storage-pool pressure of LIVE
     * session-cached artifacts accumulated by earlier families) is killed
@@ -15,11 +16,10 @@ object Bench {
     * own chunk — which is exactly what a solo run of that family pays,
     * so in-session and solo numbers agree by construction.
     */
-  private def buildSession(sfDir: String, cpus: String): SparkSession = {
+  private[graft] def buildSession(sfDir: String, cpus: String): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    // see HarnessConf: dev-only RocksDB + soak zstd-shuffle switches
-    val spark = HarnessConf.extraConf.foldLeft(SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       // default: one shuffle partition per core. At soak scales (sf100:
       // billion-row shuffles) override so partitions fit in memory — the
@@ -64,8 +64,24 @@ object Bench {
       // periodic GC keeps dead pins reaped at negligible cost (measured
       // at sf10: m4 164.7s → 61.8s before chunking existed).
       .config("spark.cleaner.periodicGC.interval", "45s")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    // SPARK_GRAFT_STATESTORE=rocksdb routes streaming state through the
+    // RocksDB provider instead of the default HDFS-backed in-memory map.
+    // At 100 TB the w-family's session/join state outgrows executor heap
+    // and RocksDB (native, spill-to-disk, incremental checkpoints) is the
+    // knob a deployment turns; this lets Bench measure what it costs and
+    // Verify prove result-parity at scales where state still fits.
+    if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
+      builder.config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // SPARK_GRAFT_SHUFFLE_ZSTD=1 switches shuffle/spill block compression
+    // from lz4 to zstd. Soak-scale runs are scratch-BYTES-bound, not
+    // CPU-bound (the sf100 pair mine writes an ~11B-row exchange whose
+    // lz4 footprint exceeds tmpfs+disk scratch); zstd's ~2x better ratio
+    // on packed integer shuffle blocks is the difference between fitting
+    // and ENOSPC. Default stays lz4 so gate/bench scales measure stock.
+    if (sys.env.get("SPARK_GRAFT_SHUFFLE_ZSTD").contains("1"))
+      builder.config("spark.io.compression.codec", "zstd")
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // when AQE cancels a superseded stage (runtime join replan), actually
     // interrupt its tasks — otherwise an abandoned aggregate keeps burning
@@ -113,10 +129,6 @@ object Bench {
     // so its runs always measure the full registry
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // dev-only per-query trace on stderr (never set by the driver)
-    val trace = sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1")
-    // dev-only escape hatch: one shared session, the pre-round-11 shape
-    val oneSession = sys.env.get("SPARK_GRAFT_BENCH_ONE_SESSION").contains("1")
     // per-query storage-pool sample, taken right AFTER the query's
     // count() returns: cached bytes actually resident (getRDDStorageInfo
     // filters to blocks with storage) plus the count of LIVE pinned RDDs
@@ -141,18 +153,18 @@ object Bench {
       if (chunkFamilies.lastOption.contains(f)) ()
       else {
         // chunk boundary: a fresh session per family (see buildSession)
-        if (i > 0 && !oneSession) { spark.stop(); spark = buildSession(sfDir, cpus) }
+        if (i > 0) { spark.stop(); spark = buildSession(sfDir, cpus) }
         chunkFamilies += f
       }
-      if (trace) System.err.println(s"[bench] ${System.currentTimeMillis()} start $name")
       val t0 = System.nanoTime()
       // record failures explicitly: a thrown count() used to leave an
       // indistinguishable wall-clock number in the record (at sf100 a
       // driver-maxResultSize abort looked like a normal 42s query) —
-      // failed queries now land in the record's "errors" list
+      // failed queries now land in the record's "errors" list, and the
+      // cause on stderr (stdout carries only the record lines)
       val ok = try { fn(spark, sfDir).count(); true }
                catch { case e: Throwable =>
-                 if (trace) System.err.println(
+                 System.err.println(
                    s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
                  false }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -186,7 +198,7 @@ object Bench {
     spark.range(3000000000L).selectExpr("sum(id % 1000)").collect()
     val calParEnd = (System.nanoTime() - calT1) / 1e9
     val (full, compact) = renderRecords(results, failed, storage,
-      chunkFamilies.toSeq, calSingle, calPar, calParEnd, sfDir, warm)
+      chunkFamilies.toSeq, calSingle, calPar, calParEnd, sfDir, cpus.toInt, warm)
     // the full map to a bare file at an absolute path (sbt's cwd is the
     // repo root; resolve explicitly so a different launcher cwd still
     // lands it somewhere findable)
@@ -205,6 +217,19 @@ object Bench {
     println(full)
     println(compact)
   }
+
+  /** The artifact-consuming queries that get a second, warm-artifact
+    * timed run into "queries_warm" (additive attribution — see the
+    * triples loop). Membership = every query whose first run builds or
+    * shares a session-pinned standing artifact that alphabetically
+    * earlier family members have NOT already built.
+    */
+  private[graft] val warmAttributed: Set[String] = Set(
+    "d13_incremental_minhash", "d14_retire_reprobe",
+    "s21_incremental_ann_apply", "g11_incremental_edges",
+    "m16_incremental_payloads", "e18_maintenance_dag",
+    "w22_stream_incremental_dedup", "w23_stream_incremental_ann",
+    "w24_stream_incremental_edges", "w25_stream_incremental_payloads")
 
   /** Render the (full, compact) record lines. Pure — unit-tested by
     * BenchRecordSpec. BOTH lines carry totals computed from the FULL
@@ -232,20 +257,10 @@ object Bench {
     * CAL_REF is the clean-host parallel calibration recorded in round 5.
     * The raw value stays authoritative; the normalized one is what
     * cross-round comparisons should read (README "Benchmark" section).
+    * CAL_REF was measured on a 32-core host and the parallel probe
+    * scales with core count, so value_normalized is null unless `cpus`
+    * is 32; both lines record `cpus`.
     */
-  /** The artifact-consuming queries that get a second, warm-artifact
-    * timed run into "queries_warm" (additive attribution — see the
-    * triples loop). Membership = every query whose first run builds or
-    * shares a session-pinned standing artifact that alphabetically
-    * earlier family members have NOT already built.
-    */
-  private[graft] val warmAttributed: Set[String] = Set(
-    "d13_incremental_minhash", "d14_retire_reprobe",
-    "s21_incremental_ann_apply", "g11_incremental_edges",
-    "m16_incremental_payloads", "e18_maintenance_dag",
-    "w22_stream_incremental_dedup", "w23_stream_incremental_ann",
-    "w24_stream_incremental_edges", "w25_stream_incremental_payloads")
-
   private[graft] def renderRecords(
       results: Map[String, Double],
       failed: Seq[String],
@@ -255,15 +270,18 @@ object Bench {
       calPar: Double,
       calParEnd: Double,
       sfDir: String,
+      cpus: Int,
       warm: Map[String, Double] = Map.empty): (String, String) = {
     def fmt(v: Double): String = f"$v%.3f"
     val calRef = 0.320
+    val calRefCpus = 32
     val calMeasured = (calPar + calParEnd) / 2.0
     val failedSet = failed.toSet
     val totalSec = results.collect { case (k, v) if !failedSet(k) => v }.sum
     val failedSec = results.collect { case (k, v) if failedSet(k) => v }.sum
     val normSec =
-      if (calMeasured > 0) totalSec * (calRef / calMeasured) else totalSec
+      if (cpus != calRefCpus) "null"
+      else fmt(if (calMeasured > 0) totalSec * (calRef / calMeasured) else totalSec)
     def jsonLine(m: Map[String, Double], withStorage: Boolean): String = {
       val qs = m.toSeq.sortBy(-_._2)
         .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
@@ -289,7 +307,7 @@ object Bench {
       s"""{"metric":"total","value":${fmt(totalSec)},"unit":"sec","n_queries":${results.size},""" +
         s""""n_failed":${failed.size},""" +
         s""""errors":$er,"failed_sec":${fmt(failedSec)},""" +
-        s""""value_normalized":${fmt(normSec)},"cal_ref":${fmt(calRef)},""" +
+        s""""value_normalized":$normSec,"cal_ref":${fmt(calRef)},"cpus":$cpus,""" +
         s""""cal_single_sec":${fmt(calSingle)},"cal_parallel_sec":${fmt(calPar)},""" +
         s""""cal_parallel_end_sec":${fmt(calParEnd)},""" +
         s""""session_chunks":$ch,""" +

@@ -17,8 +17,4 @@ object Q {
   def sql(name: String, doc: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): Q =
     Q(name, doc, run, Some(oracle))
-
-  def rowsOnly(name: String, doc: String)(
-      run: (SparkSession, String) => DataFrame): Q =
-    Q(name, doc, run, None)
 }

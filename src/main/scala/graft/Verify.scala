@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * verify_manifest.json, one record per dumped query (status, seconds,
+  * written rows, and the error class and message of a failure). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional trailing args: restrict the dump to named queries (dev
@@ -10,72 +11,61 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // see HarnessConf: dev-only RocksDB + soak zstd-shuffle switches
-    val spark = HarnessConf.extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      // see Bench: overridable at soak scales so partitions fit in memory
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // no runtime broadcast demotion (see Bench.scala) — cancelled map
-      // stages leave zombie tasks that slow every later dump
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      // shuffle/spill scratch on tmpfs (see Bench) — the dump itself
-      // still writes results wherever outDir points; soak dumps add a
-      // disk root (SPARK_GRAFT_SCRATCH_DISK, round-robined) so a heavy
-      // spill splits across RAM and disk like executor-local NVMe would
-      .config("spark.local.dir", {
-        val shm = ops.StreamingQueries.fastTmpDir("graft_local_verify")
-        sys.env.get("SPARK_GRAFT_SCRATCH_DISK") match {
-          case Some(d) =>
-            shm + "," + ops.StreamingQueries.scratchDirAt(d, "graft_local_verify")
-          case None => shm
-        }
-      })
-      // reap dead single-use localCheckpoint pins between queries (see
-      // Bench.scala — the full-dump session accumulates them the same way)
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // interrupt tasks of AQE-cancelled stages (see Bench) — zombie tasks
-    // from one query would otherwise slow every later dump
-    spark.sparkContext.setLocalProperty("spark.job.interruptOnCancel", "true")
+    // Bench's recipe: the dump plans and runs every query the way the
+    // bench times it
+    val spark = Bench.buildSession(sfDir, cpus)
     new java.io.File(outDir).mkdirs()
     // coalesce(1) keeps gate-scale dumps single-file for the driver's
     // reader; soak dumps (sf100: multi-hundred-million-row results) set
     // SPARK_GRAFT_NO_COALESCE=1 to write in parallel — compare_cached
     // globs <dir>/*.parquet either way
     val noCoalesce = sys.env.get("SPARK_GRAFT_NO_COALESCE").contains("1")
-    SparkEntry.queries
+    val manifest = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try {
+      .map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val outcome = try {
         val df = fn(spark, sfDir)
         (if (noCoalesce) df else df.coalesce(1)).write.mode("overwrite")
           .parquet(s"$outDir/$name")
+        // rows as written: read back, so the count is the dump's own
+        Right(spark.read.parquet(s"$outDir/$name").count())
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Left(e)
       }
+      s"${q(name)}: ${manifestRecord((System.nanoTime() - t0) / 1e9, outcome)}"
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/verify_manifest.json"),
+      manifest.mkString("{\n", ",\n", "\n}\n"))
     spark.stop()
   }
+
+  /** One query's manifest record: written rows, or the failure. */
+  private[graft] def manifestRecord(seconds: Double, outcome: Either[Throwable, Long]): String = {
+    val sec = f""""seconds":$seconds%.3f"""
+    outcome match {
+      case Right(rows) => s"""{"status":"ok",$sec,"rows":$rows}"""
+      // the message is capped: analysis errors can embed whole plans
+      case Left(e) => s"""{"status":"failed",$sec,"rows":null,""" +
+        s""""error_class":${q(e.getClass.getName)},""" +
+        s""""error_message":${q(String.valueOf(e.getMessage).take(2000))}}"""
+    }
+  }
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in builder-authored SQL would otherwise make the
+  // driver's json.load fail and silently zero the round's correctness.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

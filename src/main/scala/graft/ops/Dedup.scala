@@ -107,7 +107,7 @@ object Dedup {
     * and candidate volume stops scaling with hot-shingle df² — the thing
     * that kills a naive inverted index at corpus scale.
     */
-  private def prefixCandidates(docs: DataFrame, t: Double): DataFrame =
+  private[ops] def prefixCandidates(docs: DataFrame, t: Double): DataFrame =
     prefixSelfJoin(prefixIndex(docs, t))
 
   /** The per-doc prefix index: (doc_id, sh) where sh = xxhash64(shingle)
@@ -212,7 +212,7 @@ object Dedup {
   /** Exact Jaccard over candidate pairs: join back the full shingle sets,
     * intersect, threshold. (doc_a, doc_b, jaccard ≥ t.)
     */
-  private def jaccardVerify(docs: DataFrame, cand: DataFrame, t: Double): DataFrame = {
+  private[ops] def jaccardVerify(docs: DataFrame, cand: DataFrame, t: Double): DataFrame = {
     // join order matters for scale AND was measured: the bare candidate
     // pairs (two longs) broadcast into the corpus scan for join 1; the
     // result carries doc_a's shingle array, so join 2 must NOT broadcast
@@ -287,27 +287,6 @@ object Dedup {
       // reapable (see prefixIndexCached)
       jaccardVerify(docs, cand, t).localCheckpoint()
     }
-
-  /** Prefix-filtered pair pipeline (uncached), exposed for the
-    * losslessness cross-check in OpsSpec.
-    */
-  def jaccardPairsPrefix(spark: SparkSession, dir: String, t: Double): DataFrame = {
-    val docs = shingledDocs(spark, dir)
-    jaccardVerify(docs, prefixCandidates(docs, t), t)
-  }
-
-  /** The naive full inverted-index pair join (all shingles indexed) —
-    * kept as the cross-check reference for [[prefixCandidates]].
-    */
-  def jaccardPairsNaive(spark: SparkSession, dir: String, t: Double): DataFrame = {
-    val docs = shingledDocs(spark, dir)
-    val ex = docs.select(col("doc_id"), explode(col("s")).as("s"))
-    val cand = ex.as("a").join(ex.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    jaccardVerify(docs, cand, t)
-  }
 
   private val K = 32 // minhash functions
   private val BANDS = 8 // bands of 4 rows each
@@ -849,27 +828,6 @@ object Dedup {
         size(col("sb.s")).cast("bigint").as("nsh_b"),
         round(oc, 6).as("overlap_coef"))
       .orderBy("doc_a", "doc_b")
-  }
-
-  /** Naive full-inverted-index containment pairs — the cross-check
-    * reference proving d8's asymmetric prefix filter lossless (OpsSpec).
-    */
-  def containmentPairsNaive(spark: SparkSession, dir: String, t: Double): DataFrame = {
-    val docs = shingledDocs(spark, dir)
-    val ex = docs.select(col("doc_id"), explode(col("s")).as("s"))
-    val cand = ex.as("a").join(ex.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val withA = broadcast(cand)
-      .join(docs.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .select(col("doc_a"), col("doc_b"), col("sa.s").as("s_a"))
-    val nCommon = GraftExpressions.intersectCount(col("s_a"), col("sb.s"))
-    val oc = nCommon.cast("double") /
-      least(size(col("s_a")), size(col("sb.s")))
-    withA.join(docs.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .filter(oc >= t)
-      .select(col("doc_a"), col("doc_b"), round(oc, 6).as("overlap_coef"))
   }
 
   private val SEM_CELLS = 8

@@ -2211,31 +2211,15 @@ object Similarity {
     *
     * Runs on the codegen'd
     * [[graft.functions.GraftExpressions.ArgMinCell]] kernel: the
-    * higher-order formulation ([[assignStructExprHof]], spec-pinned
-    * bit-equal) interprets ~5 expression nodes per (cell × dim) per
-    * row — at sf10 that interpretation dominated the s14/s20 train cost
-    * (§7.18). Callers must have the graft registry installed
+    * higher-order formulation (`CrossCheck.assignStructExprHof` in the
+    * test sources, spec-pinned bit-equal) interprets ~5 expression nodes
+    * per (cell × dim) per row — at sf10 that interpretation dominated the
+    * s14/s20 train cost (§7.18). Callers must have the graft registry installed
     * ([[graft.functions.GraftExpressions.register]] — kmAssignOf, s20's
     * assign, and w23's stream builder all do).
     */
   private[ops] def assignStructExpr(v: Column, cents: Column): Column =
     graft.functions.GraftExpressions.argminCell(v, cents)
-
-  /** The pre-round-14 higher-order formulation of [[assignStructExpr]] —
-    * kept ONLY as the reference semantics the ArgMinCellSpec equality
-    * pin compares the native kernel against (zip_with null-padding,
-    * strict-min keep-first, (∞, -1) init).
-    */
-  private[ops] def assignStructExprHof(v: Column, cents: Column): Column = {
-    val dists = transform(cents, c => struct(
-      aggregate(zip_with(v, c.getField("cv"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, z) => acc + z).as("dist"),
-      c.getField("cell").as("cell")))
-    aggregate(dists,
-      struct(lit(Double.PositiveInfinity).as("dist"), lit(-1L).as("cell")),
-      (acc, d) => when(d.getField("dist") < acc.getField("dist"), d)
-        .otherwise(acc))
-  }
 
   /** Incremental ANN index apply — the d13 move for vectors, closing the
     * last missing incremental-maintenance shape: a new 5% batch

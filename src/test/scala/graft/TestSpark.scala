@@ -6,26 +6,13 @@ import org.apache.spark.sql.SparkSession
   * single forked JVM; building a session per suite costs ~5s each).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // no runtime broadcast demotion (see Bench.scala) — cancelled map
-      // stages leave zombie tasks that slow every later suite
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // interrupt tasks of AQE-cancelled stages (see Bench.scala) — zombie
-    // tasks from one suite would otherwise slow every later one
-    s.sparkContext.setLocalProperty("spark.job.interruptOnCancel", "true")
-    s
-  }
-
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Bench's session recipe at 4 cores, so 4 shuffle partitions (the
+    * PlanSpec pins assume them) unless SPARK_GRAFT_SHUFFLE_PARTITIONS
+    * overrides the count.
+    */
+  lazy val spark: SparkSession = Bench.buildSession(sf0001, "4")
 
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the native codegen'd argmin kernel
   * ([[graft.functions.GraftExpressions.ArgMinCell]], behind
   * [[Similarity.assignStructExpr]]) bit-equal to the pre-round-14
-  * higher-order formulation ([[Similarity.assignStructExprHof]]) it
+  * higher-order formulation ([[CrossCheck.assignStructExprHof]]) it
   * replaced in every assign stage (s14/s16/s18/s20/s21/w23). The HOF
   * chain is the semantics the DuckDB oracles mirror (fixed-order
   * squared-L2 fold, strict-min keep-first = ORDER BY dist, cell LIMIT 1,
@@ -20,7 +20,7 @@ class ArgMinCellSpec extends AnyFunSuite {
 
   private def bothCols = Seq(
     Similarity.assignStructExpr(col("v"), col("cents")).as("nat"),
-    Similarity.assignStructExprHof(col("v"), col("cents")).as("hof"))
+    CrossCheck.assignStructExprHof(col("v"), col("cents")).as("hof"))
 
   test("native == HOF bit-for-bit over the real corpus and a real codebook") {
     graft.functions.GraftExpressions.register(spark)

@@ -97,7 +97,7 @@ class BucketingSpec extends AnyFunSuite {
       // containment, not a count comparison: every verified near-dup pair
       // must appear among the bucketed-index candidates — a corrupted
       // index write shows up here as a lost pair
-      val verified = Dedup.jaccardPairsNaive(spark, sf, 0.8)
+      val verified = CrossCheck.jaccardPairsNaive(spark, sf, 0.8)
         .select(col("doc_a"), col("doc_b"))
       assert(verified.exceptAll(cand).isEmpty,
         "bucketed index lost verified near-dup pairs")

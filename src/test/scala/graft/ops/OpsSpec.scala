@@ -65,9 +65,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("d2 prefix filtering is lossless: equals the naive full inverted index") {
-    val pref = Dedup.jaccardPairsPrefix(spark, sf, 0.8).collect()
+    val pref = CrossCheck.jaccardPairsPrefix(spark, sf, 0.8).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard"))).toSet
-    val naive = Dedup.jaccardPairsNaive(spark, sf, 0.8).collect()
+    val naive = CrossCheck.jaccardPairsNaive(spark, sf, 0.8).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard"))).toSet
     assert(pref === naive)
   }
@@ -85,7 +85,7 @@ class OpsSpec extends AnyFunSuite {
     val pref = Dedup.d8Containment.run(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Double]("overlap_coef"))).toSet
-    val naive = Dedup.containmentPairsNaive(spark, sf, 0.8).collect()
+    val naive = CrossCheck.containmentPairsNaive(spark, sf, 0.8).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Double]("overlap_coef"))).toSet
     assert(pref === naive)

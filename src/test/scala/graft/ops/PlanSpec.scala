@@ -61,7 +61,7 @@ class PlanSpec extends AnyFunSuite {
     // the executed d2 reads the localCheckpoint-pinned pair table, so the
     // join shape is pinned on the UNCACHED pipeline (same plan the pin
     // build runs once per session)
-    val p = Dedup.jaccardPairsPrefix(spark, sf, 0.8)
+    val p = CrossCheck.jaccardPairsPrefix(spark, sf, 0.8)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
